@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{GraphStore, Index, TextIndex}
@@ -33,16 +32,8 @@ object ArtifactScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("testdata-sf1.0")
     val nTriggers = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("probe_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local(SessionConf.cpus(32), "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("probe_wh").toString)
 
     val nS = nTriggers + 1
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

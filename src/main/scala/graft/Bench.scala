@@ -1,5 +1,10 @@
 package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -9,42 +14,20 @@ import org.apache.spark.sql.SparkSession
   * and would "measure" narrow queries as scan-only — and one warmup
   * query runs first so JVM/codegen/JCE one-time init isn't attributed
   * to whichever query happens to run first.
+  *
+  * Next to each time the detail records what the run scheduled — jobs,
+  * stages, tasks, shuffle bytes read and written — for the cold run and
+  * the first warm run: at the bench point a query's cost is its
+  * scheduled jobs (~0.1 s each, OPTIMIZATION_r18.md), not its bytes.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def run(name: String): Double = {
-      // per-query cache reset: operators cache shared bases for the
-      // life of the job (graft.ops.Caching) — clearing between queries
-      // keeps per-query times attributable (each pays its own
-      // materialization; no cross-query cache interference) and the
-      // session's executor memory flat across the 40+ query sweep.
-      spark.catalog.clearCache()
-      // localCheckpoint blocks are NOT released by clearCache — they
-      // free only when the driver GCs the RDD reference and the
-      // ContextCleaner runs. Over a 100-query sweep they accumulate
-      // until a major collection lands INSIDE someone's timed window
-      // (observed as 2-3× in-sweep anomalies that IsoBench can't
-      // reproduce). Collect here, in the untimed reset phase, so each
-      // query starts from a settled heap.
-      System.gc()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val cpus = SessionConf.cpus(32)
+    val spark = SessionConf.local(cpus)
+    val counter = new Counter
+    spark.sparkContext.addSparkListener(counter)
+    def run(name: String): Run = measure(spark, sfDir, name, counter, cold = true)
 
     // second timed pass per query WITHOUT the cache reset — cold
     // (attributable, includes materialization) vs warm (shared bases
@@ -86,30 +69,21 @@ object Bench {
     // widen THAT query's per-query tolerance by its own measured
     // noise instead of a prose allowlist entry
     val warmSpread = scala.collection.mutable.Map.empty[String, Double]
-    def runWarm(name: String): Double = {
+    /** min-of-N warm time, plus the first warm run's counts */
+    def runWarm(name: String): (Double, Counts) = {
       // a FAILED run fails fast — its short elapsed time must not
       // compete in the min against honest samples (it would lock in a
       // bogus floor); only when every run failed does the failed time
       // stand, keeping the artifact self-describing
-      def once(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.mode("overwrite").format("noop").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed warm: ${e.getMessage}")
-            false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val samples = (1 to warmRunsFor(name)).map(_ => once())
-      val good = samples.filter(_._2).map(_._1)
-      if (good.nonEmpty) {
-        warmSpread(name) = good.max / good.min
-        good.min
-      } else samples.map(_._1).min
+      val samples = (1 to warmRunsFor(name))
+        .map(_ => measure(spark, sfDir, name, counter, cold = false))
+      val good = samples.filter(_.ok).map(_.sec)
+      val sec =
+        if (good.nonEmpty) {
+          warmSpread(name) = good.max / good.min
+          good.min
+        } else samples.map(_.sec).min
+      (sec, samples.head.counts)
     }
 
     run("q_cdc_changes") // warmup, untimed
@@ -131,21 +105,23 @@ object Bench {
     // line, and the FINAL line is compact (2-decimal per-query values)
     // with the headline totals REPEATED as the last keys, so even a
     // clipped tail still carries value/total_warm.
+    def obj[A](rs: Seq[(String, A)])(v: A => String): String =
+      rs.map { case (k, a) => "\"" + k + "\":" + v(a) }.mkString("{", ",", "}")
     def fmt(rs: Seq[(String, Double)], dp: Int): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + s"%.${dp}f".format(v) }
-        .mkString("{", ",", "}")
-    def fmtRaw(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val cold = results.map(r => r._1 -> r._2)
-    val warm = if (warmPass) results.map(r => r._1 -> r._3.get) else Nil
+      obj(rs)(v => s"%.${dp}f".format(v))
+    val cold = results.map(r => r._1 -> r._2.sec)
+    val total = cold.map(_._2).sum
+    val warm = results.flatMap(r => r._3.map(w => r._1 -> w._1))
     val totalWarm = warm.map(_._2).sum
     val spread = warm.map(r => r._1 -> warmSpread.getOrElse(r._1, 1.0))
-    val detailJson = s"""{"metric":"bench_detail","queries":${fmtRaw(cold)}${
+    val coldCounts = results.map(r => r._1 -> r._2.counts)
+    val warmCounts = results.flatMap(r => r._3.map(w => r._1 -> w._2))
+    val detailJson = s"""{"metric":"bench_detail","queries":${
+      obj(cold)(_.toString)},"counters":${obj(coldCounts)(_.json)}${
       if (warmPass)
-        s""","queries_warm":${fmtRaw(warm)},"queries_warm_spread":${
-          fmt(spread, 3)}"""
-      else ""},"sf":"$sfDir"}"""
+        s""","queries_warm":${obj(warm)(_.toString)},"queries_warm_spread":${
+          fmt(spread, 3)},"counters_warm":${obj(warmCounts)(_.json)}"""
+      else ""},"cpus":$cpus,"sf":"$sfDir"}"""
     println(detailJson)
     // the stdout tail the driver keeps has truncated this line every
     // round (sample-limited judge comparisons) — persist the full
@@ -155,15 +131,20 @@ object Bench {
     // compares against (the round-9 trap: an sf0.001 run silently
     // replaced the lock baseline). The un-suffixed BENCH_DETAIL.json
     // is additionally kept as the lock's canonical path, written ONLY
-    // for sf0.1 runs.
+    // for full sf0.1 sweeps at the 32-core bench point.
     val sfBase = new java.io.File(sfDir).getName // e.g. "sf0.1"
-    // a SUBSET run (SPARK_GRAFT_BENCH_ONLY) must never overwrite a
-    // full sweep's detail — it lands in a .partial file instead
-    val suffix = if (only.isDefined) ".partial" else ""
+    // any other core count carries it in the name (an 8-core sweep
+    // once overwrote the 32-core reference), and a SUBSET run
+    // (SPARK_GRAFT_BENCH_ONLY) must never overwrite a full sweep's
+    // detail — it lands in a .partial file instead
+    val benchPoint = cpus == 32
+    val suffix = (if (benchPoint) "" else s".c$cpus") +
+      (if (only.isDefined) ".partial" else "")
     val detailPaths = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
       .map(Seq(_))
       .getOrElse(Seq(s"BENCH_DETAIL.$sfBase$suffix.json") ++
-        (if (sfBase == "sf0.1" && only.isEmpty) Seq("BENCH_DETAIL.json")
+        (if (sfBase == "sf0.1" && only.isEmpty && benchPoint)
+           Seq("BENCH_DETAIL.json")
          else Nil))
     detailPaths.foreach { detailPath =>
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
@@ -184,5 +165,82 @@ object Bench {
       top.size},"sf":"$sfDir","queries":${fmt(top, 2)},"value":${
       "%.3f".format(total)}$warmField,"total":${"%.3f".format(total)}}""")
     spark.stop()
+  }
+
+  /** What one run scheduled. */
+  final case class Counts(jobs: Long, stages: Long, tasks: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, shuffleReadBytes - o.shuffleReadBytes,
+      shuffleWriteBytes - o.shuffleWriteBytes)
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuffle_read_bytes":${
+        shuffleReadBytes},"shuffle_write_bytes":$shuffleWriteBytes}"""
+  }
+
+  /** Running totals over every job the context schedules; a run's
+    * counts are the difference of two snapshots taken with the
+    * listener bus drained. */
+  final class Counter extends SparkListener {
+    private val jobs, stages, tasks, read, written = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics // null when a task failed before reporting
+      if (m != null) {
+        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    def snapshot: Counts =
+      Counts(jobs.get, stages.get, tasks.get, read.get, written.get)
+  }
+
+  final case class Run(sec: Double, ok: Boolean, counts: Counts)
+
+  /** Materializes the named query once through the noop sink. The
+    * listener bus is drained on both sides of the timed window, never
+    * inside it, so `counts` holds exactly this run's work.
+    */
+  def measure(spark: SparkSession, sfDir: String, name: String,
+      counter: Counter, cold: Boolean): Run = {
+    if (cold) {
+      // per-query cache reset: operators cache shared bases for the
+      // life of the job (graft.ops.Caching) — clearing between queries
+      // keeps per-query times attributable (each pays its own
+      // materialization; no cross-query cache interference) and the
+      // session's executor memory flat across the 40+ query sweep.
+      spark.catalog.clearCache()
+      // localCheckpoint blocks are NOT released by clearCache — they
+      // free only when the driver GCs the RDD reference and the
+      // ContextCleaner runs. Over a 100-query sweep they accumulate
+      // until a major collection lands INSIDE someone's timed window
+      // (observed as 2-3× in-sweep anomalies that isolated re-runs
+      // can't reproduce; the detail's counters tell such a pause from
+      // extra work: same jobs/stages/tasks, more seconds). Collect
+      // here, in the untimed reset phase, so each query starts from a
+      // settled heap.
+      System.gc()
+    }
+    val sc = spark.sparkContext
+    Bridge.drainListeners(sc)
+    val before = counter.snapshot
+    val t0 = System.nanoTime()
+    val ok =
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(
+          s"[bench] $name failed${if (cold) "" else " warm"}: ${e.getMessage}")
+        false
+      }
+    val sec = (System.nanoTime() - t0) / 1e9
+    Bridge.drainListeners(sc)
+    Run(sec, ok, counter.snapshot - before)
   }
 }

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-attribution probe for the two flagged drift items
   * (VERDICT r11 "What's wrong" #2/#3): runs `q_mm_audio` and
   * `q_text_rm3_frozen_serve` N times each inside ONE session —
-  * clearCache between iterations, exactly the Bench warm-run shape —
+  * caches reset between iterations, exactly the Bench cold-run shape —
   * and prints every wall time. The question each answers:
   *
   *  - `q_mm_audio` warm moved 0.55 → 1.26 s between the r10 and r11
@@ -25,6 +23,16 @@ import org.apache.spark.sql.SparkSession
   * (×2.37) — the query list is now an argument so every future
   * unattributed lock trip runs through the identical instrument.
   *
+  * With `iters = 3` it is also the isolated-query check: the named
+  * queries in a fresh JVM, caches reset every rep, which separates
+  * plan cost (the steady reps) from one-time JVM state — first
+  * executions of the codegen-heavy ANN queries pay ~2× for
+  * whole-stage/Janino compilation, which in-bench lands on whichever
+  * query compiles the shapes first.
+  *
+  * Every iteration is one cold [[Bench.measure]] — Bench's own reset,
+  * timing and job/stage/task counters.
+  *
   * Usage: `runMain graft.DriftProbe [sfDir] [iters] [q1,q2,...]`
   */
 object DriftProbe {
@@ -34,26 +42,18 @@ object DriftProbe {
     val queryNames = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q_mm_audio", "q_text_rm3_frozen_serve"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local(SessionConf.cpus(32))
+    val counter = new Bench.Counter
+    spark.sparkContext.addSparkListener(counter)
 
-    def series(name: String): Seq[Double] = {
-      val fn = SparkEntry.queries(name)
+    def series(name: String): Seq[Double] =
       (1 to iters).map { i =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"[driftprobe] $name iter $i: $s%.3f s")
-        s
+        val r = Bench.measure(spark, sfDir, name, counter, cold = true)
+        val c = r.counts
+        println(f"[driftprobe] $name iter $i: ${r.sec}%.3f s " +
+          s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
+        r.sec
       }
-    }
 
     queryNames.foreach { name =>
       val ts = series(name)

@@ -529,26 +529,33 @@ object Plans {
         |corpus-wide shuffle beyond the BM25 index build the ranker
         |itself owns.""".stripMargin)
 
+  private def formatted(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** `runMain graft.Plans [out] [sfDir] [q_name...]`: with no names,
+    * writes PLANS.md; with names, writes just those queries' formatted
+    * plans, each under a `==== name ====` header (before/after plan
+    * evidence for a change).
+    */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(2)
+    // fixed, not SPARK_GRAFT_CPUS: plan text prints the shuffle
+    // partition count, and the artifact must not depend on the box
+    val spark = SessionConf.local(4)
 
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the load-bearing queries\n\n")
-    sb.append("Generated by `graft.Plans` at sf0.001; the same properties are\n")
-    sb.append("asserted by `PlanSpec` in CI.\n")
-    for ((name, note) <- commentary) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
-    }
+    if (names.isEmpty) {
+      sb.append("# PLANS — formatted physical plans of the load-bearing queries\n\n")
+      sb.append("Generated by `graft.Plans` at sf0.001; the same properties are\n")
+      sb.append("asserted by `PlanSpec` in CI.\n")
+      for ((name, note) <- commentary)
+        sb.append(s"\n## $name\n\n$note\n\n```\n${formatted(spark, sfDir, name)}```\n")
+    } else
+      for (name <- names)
+        sb.append(s"==== $name ====\n${formatted(spark, sfDir, name)}")
     Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
     println(s"[plans] wrote $out")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 scale-point generator: 10 statistically-faithful copies of
@@ -72,14 +72,7 @@ object ScaleGen {
     val src = positional.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = positional.lift(1).getOrElse("testdata-sf1.0")
     val copies = positional.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local(SessionConf.cpus(32))
 
     def t(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

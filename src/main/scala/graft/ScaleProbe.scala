@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-knob probe for the sf1.0 point: the graph/ANN family's
@@ -20,14 +19,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("testdata-sf1.0")
     val fine = args.lift(1).map(_.toInt).getOrElse(141) // ~sqrt(20k)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local(SessionConf.cpus(32))
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
     def timed(label: String)(f: => Unit): Double = {

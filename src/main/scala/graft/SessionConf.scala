@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive session tuning shared by the driver-contract mains
-  * (Bench, Verify) and the measurement probes — guide §2.2 / §2.4 and
+/** The one session builder every main goes through ([[local]]), and
+  * the scale-adaptive tuning it applies ([[tuned]]) — guide §2.2 / §2.4 and
   * the round-18 brief's "make partitioning scale-adaptive (AQE
   * coalescing / derive from input size) rather than a constant tuned
   * for either local mode or the cluster".
@@ -29,6 +29,34 @@ import org.apache.spark.sql.SparkSession
   * reproducible and the production value is a conf, not a code edit.
   */
 object SessionConf {
+  /** `SPARK_GRAFT_CPUS` if set, else `default`. A value that is not a
+    * positive integer fails here, naming the variable, instead of
+    * surfacing later as a Spark master-URL or NumberFormatException.
+    */
+  def cpus(default: Int): Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default)
+
+  private[graft] def parseCpus(raw: Option[String], default: Int): Int =
+    raw.fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** A `local[cores]` session: shuffle partitions = cores, UTC, UI off,
+    * log level WARN, then [[tuned]]. `conf` carries what a caller needs
+    * beyond that (e.g. a private warehouse dir).
+    */
+  def local(cores: Int, conf: (String, String)*): SparkSession = {
+    val spark = tuned(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(conf.toMap))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",

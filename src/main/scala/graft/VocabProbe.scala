@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Vocabulary-growth probe for the sf1.0 point: the posting-join
@@ -29,14 +28,7 @@ object VocabProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("testdata-sf1.0")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local(SessionConf.cpus(32))
 
     val fixed = spark.read.parquet(s"$sfDir/documents.parquet")
     val total = fixed.count()

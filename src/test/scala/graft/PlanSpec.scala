@@ -755,4 +755,21 @@ class PlanSpec extends AnyFunSuite {
     assert("lshrs:".r.findAllIn(p).size >= scans,
       s"sample predicate not at every pass:\n$p")
   }
+
+  // A plan's cost at the bench point is the jobs it schedules, and a
+  // count is evidence only if it repeats exactly: two cold runs of one
+  // query must schedule the same jobs, stages and tasks.
+  test("Bench counters: cold runs record jobs, stages and tasks, and repeat them exactly") {
+    val counter = new Bench.Counter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      for (name <- Seq("q_cdc_changes", "q_cdc_lww_merge")) {
+        val Seq(a, b) = (1 to 2).map(_ => Bench.measure(spark, sf, name, counter, cold = true))
+        assert(a.ok && b.ok, name)
+        assert(a.counts.jobs >= 1 && a.counts.tasks >= a.counts.jobs, s"$name: ${a.counts}")
+        assert((a.counts.jobs, a.counts.stages, a.counts.tasks) ==
+          (b.counts.jobs, b.counts.stages, b.counts.tasks), s"$name: ${a.counts} vs ${b.counts}")
+      }
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
 }
